@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every query executed to completion against
   * `SPARK_GRAFT_SF_DIR`, one JSON line on stdout.
@@ -12,32 +11,17 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle/spill compression (A/B hook: SPARK_GRAFT_IO_CODEC).
-    // Pinned to lz4, NOT GraftSession.profile's zstd: the 3-sample
-    // sf0.1 A/B measured zstd a net loss here (401 s vs 393 s; q106
-    // 4.7→9.3 s) because local small-SF shuffles sit in page cache and
-    // the better ratio buys no IO back, only CPU. The at-scale paths
-    // (sf1.0 sweeps, GraftSession deployments) keep zstd, where
-    // shuffle bytes are the binding constraint — see SCALE.md.
-    val ioCodec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.io.compression.codec", ioCodec)
-      // r17: the default whole-stage-codegen class cache holds 100
-      // entries; this surface generates a few THOUSAND distinct classes
-      // per full pass, so with the default every round recompiles every
-      // query (janino ~10-100 ms per class) and min-of-N never reaches
-      // a warm state. A JVM-compiler cache, not a result cache — sized
-      // to hold the whole surface. Static conf: must be set at session
-      // build time.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The one override of GraftSession.profile: lz4, not the profile's
+    // zstd. The 3-sample sf0.1 A/B measured zstd a net loss here (401 s
+    // vs 393 s; q106 4.7→9.3 s) because local small-SF shuffles sit in
+    // page cache and the better ratio buys no IO back, only CPU. The
+    // at-scale paths (sf1.0 sweeps, GraftSession deployments) keep
+    // zstd, where shuffle bytes are the binding constraint — see
+    // SCALE.md. The profile's 8192-entry codegen class cache is what
+    // lets min-of-N reach a warm state: this surface generates a few
+    // thousand distinct classes per full pass.
+    val spark = GraftSession.local(
+      overrides = Map("spark.io.compression.codec" -> "lz4"))
     BoundedWindows.quietWindowWarnings()
     // min of three executions per query: the box runs periodic background
     // jobs and a single sample can catch a load spike (observed 0.3s
@@ -62,19 +46,11 @@ object Bench {
     // producing duplicate keys in the errors JSON object (most parsers
     // silently keep one arbitrary value)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Optional dev filter (same grammar as Verify/check.py/PairSweep):
-    // SPARK_GRAFT_BENCH_FILTER=q26,q45 runs only the queries whose name
-    // contains one of the comma-separated substrings; a "-" prefix
-    // excludes, and an only-negative filter runs everything else.
-    // The driver never sets it, so driver runs always bench the full set.
-    val filterTerms = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    val (negTerms, posTerms) = filterTerms.partition(_.startsWith("-"))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      (posTerms.isEmpty || posTerms.exists(n.contains)) &&
-        !negTerms.exists(t => n.contains(t.stripPrefix("-")))
-    }
+    // Optional dev filter (NameFilter grammar), e.g.
+    // SPARK_GRAFT_BENCH_FILTER=q26,q45; unset, the full set is benched.
+    val keep = NameFilter(sys.env.getOrElse("SPARK_GRAFT_BENCH_FILTER", ""))
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => keep(n) }
     // Warm the JVM/codegen/classloader paths so per-query numbers measure
     // the engine, not first-use compilation. Through r16 the warmup ran
     // ONE query (q03) — useless for the other 409: each query's stages
@@ -82,48 +58,41 @@ object Bench {
     // the r16 driver got: its one round blew the 600 s budget) timed
     // janino + Catalyst first-use costs in EVERY query (round 1 of the
     // r17 baseline read 578.8 s vs 408.6 s min-of-3, BENCH_CLEAN_r17_pre).
-    // `full` mode therefore runs every SELECTED query once against the
+    // The warmup therefore runs every SELECTED query once against the
     // SMALLEST scale factor (default sf0.001) to the noop sink before any
     // timing starts: plan shapes (and thus generated classes) match the
     // benched SF because they depend on schema, not data volume. Nothing
     // about the timed region changes — every timed execution still
     // computes from the benched parquet inputs; the warmup only
-    // populates JVM compiler caches (the codegen cache above is sized so
-    // they survive). SPARK_GRAFT_BENCH_WARMUP=entry restores the old
-    // single-query warmup; =off disables warmup entirely.
+    // populates JVM compiler caches (the profile's codegen cache is
+    // sized so they survive). Without the warm-up dir it falls back to
+    // the single entry query.
     // (runs AFTER the quiet-host gate below — the warmup itself loads the
     // box, so gating on loadavg after it would stall 180 s on self-load)
-    val warmMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "full")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_DIR",
       "/root/testdata/sf0.001")
     def runWarmup(): Unit = {
-    val warmT0 = System.nanoTime()
-    warmMode match {
-      case "off" =>
-      case "entry" =>
-        SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-      case _ =>
-        if (new java.io.File(warmDir).isDirectory) {
-          var warmFailed = 0
-          selected.foreach { case (name, fn) =>
-            try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-            catch { case e: Throwable =>
-              // a warmup failure is not a bench failure: the timed run
-              // of the same query surfaces (and records) the real error
-              warmFailed += 1
-              System.err.println(
-                s"[bench] warmup $name failed (ignored): ${e.getMessage}")
-            }
+      val warmT0 = System.nanoTime()
+      if (new java.io.File(warmDir).isDirectory) {
+        var warmFailed = 0
+        selected.foreach { case (name, fn) =>
+          try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+          catch { case e: Throwable =>
+            // a warmup failure is not a bench failure: the timed run
+            // of the same query surfaces (and records) the real error
+            warmFailed += 1
+            System.err.println(
+              s"[bench] warmup $name failed (ignored): ${e.getMessage}")
           }
-          System.err.println(f"[bench] warmup: ${selected.size} queries at " +
-            f"$warmDir in ${(System.nanoTime() - warmT0) / 1e9}%.1fs " +
-            s"($warmFailed failed)")
-        } else {
-          System.err.println(s"[bench] warmup dir $warmDir missing; " +
-            "falling back to entry warmup")
-          SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
         }
-    }
+        System.err.println(f"[bench] warmup: ${selected.size} queries at " +
+          f"$warmDir in ${(System.nanoTime() - warmT0) / 1e9}%.1fs " +
+          s"($warmFailed failed)")
+      } else {
+        System.err.println(s"[bench] warmup dir $warmDir missing; " +
+          "falling back to entry warmup")
+        SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+      }
     }
     // 1-minute load average before/after: a polluted run (another process
     // hogging the box mid-bench) is then self-identifying from the JSON

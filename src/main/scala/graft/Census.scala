@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness (guide §1): per-query job/stage/task census.
   *
@@ -19,16 +18,7 @@ import org.apache.spark.sql.SparkSession
 object Census {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     BoundedWindows.quietWindowWarnings()
 
     val jobs = new AtomicInteger(0)
@@ -48,14 +38,9 @@ object Census {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    val filterTerms = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    val (negTerms, posTerms) = filterTerms.partition(_.startsWith("-"))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      (posTerms.isEmpty || posTerms.exists(n.contains)) &&
-        !negTerms.exists(t => n.contains(t.stripPrefix("-")))
-    }
+    val keep = NameFilter(sys.env.getOrElse("SPARK_GRAFT_BENCH_FILTER", ""))
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => keep(n) }
 
     // The listener bus is async and private[spark]; settle by polling the
     // counters until they stop moving (census precision, not correctness).

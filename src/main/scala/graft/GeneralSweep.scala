@@ -29,19 +29,10 @@ object GeneralSweep {
     val sf1 = args(0)
     val sf01 = args(1)
     val outPath = if (args.length > 2) args(2) else "SWEEP_SF1_GENERAL.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val wallCap = sys.env.getOrElse("SPARK_GRAFT_GEN_CAP_SEC", "600").toLong
-    def newSession(): SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same call as PairSweep: this host's buffered writeback is
-      // ~25 MB/s, so shuffle bytes — not CPU — cap the heavy walls
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
-    var spark = newSession()
-    spark.sparkContext.setLogLevel("WARN")
+    // plain profile, zstd included: as in PairSweep, shuffle bytes —
+    // not CPU — cap the heavy walls at sf1.0
+    var spark = GraftSession.local()
     BoundedWindows.quietWindowWarnings()
 
     val reps = 10L
@@ -214,14 +205,8 @@ object GeneralSweep {
 
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\")
       .replace("\"", "\\\"") + "\""
-    val filterTerms = sys.env.get("SPARK_GRAFT_GEN_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    val (negT, posT) = filterTerms.partition(_.startsWith("-"))
-    val selected = suites.filter { case (n, _) =>
-      (posT.isEmpty || posT.exists(n.contains)) &&
-        !negT.exists(t => n.contains(t.stripPrefix("-")))
-    }
+    val keep = NameFilter(sys.env.getOrElse("SPARK_GRAFT_GEN_FILTER", ""))
+    val selected = suites.filter { case (n, _) => keep(n) }
     // list mode for the fork-per-suite driver — see PairSweep
     if (sys.env.contains("SPARK_GRAFT_SWEEP_LIST")) {
       selected.foreach { case (n, _) => println(n) }
@@ -234,8 +219,7 @@ object GeneralSweep {
       if (spark.sparkContext.isStopped) {
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        spark = newSession()
-        spark.sparkContext.setLogLevel("WARN")
+        spark = GraftSession.local()
         BoundedWindows.quietWindowWarnings()
       }
       val t0 = System.nanoTime()

@@ -59,7 +59,8 @@ object GraftSession {
 
   /** Builder pre-loaded with [[profile]]; `shufflePartitions` should be
     * sized to the cluster (see scaladoc), `master` left unset on a
-    * cluster (spark-submit provides it).
+    * cluster (spark-submit provides it). The repo's only
+    * `SparkSession.builder()` call: every main and the tests build here.
     */
   def builder(shufflePartitions: Int, master: Option[String] = None)
   : SparkSession.Builder = {
@@ -69,13 +70,27 @@ object GraftSession {
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
   }
 
+  /** Local width of every session this repo builds (Bench, Verify,
+    * Census, the sweeps, the tests): `SPARK_GRAFT_CPUS` when set,
+    * otherwise the JVM's available processors. Read once per JVM.
+    */
+  lazy val cores: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(raw) => raw.trim.toIntOption.filter(_ >= 1).getOrElse(
+      sys.error(s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$raw'"))
+  }
+
   /** Local development/test shape: `local[cores]`, shuffle partitions =
     * cores (a 32-thread single JVM wants 32 partitions, not the 200
-    * cluster default — SURVEY §7's local-mode note).
+    * cluster default — SURVEY §7's local-mode note). `overrides` are
+    * applied on top of [[profile]]; a caller passing one says why next
+    * to it.
     */
-  def local(cores: Int): SparkSession = {
+  def local(cores: Int = GraftSession.cores,
+            overrides: Map[String, String] = Map.empty): SparkSession = {
     val s = builder(cores, Some(s"local[$cores]"))
       .config("spark.ui.enabled", "false")
+      .config(overrides)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     ensureExtensions(s)

@@ -98,29 +98,17 @@ object PairSweep {
     val sf1 = args(0)
     val sf01 = args(1)
     val outPath = if (args.length > 2) args(2) else "SWEEP_SF1_PAIRS.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val wallCap = sys.env.getOrElse("SPARK_GRAFT_PAIR_CAP_SEC", "600").toLong
-    def newSession(): SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The pair suites are the repo's biggest shufflers (q106 writes
-      // tens of GB of candidate-pair shuffle at sf1.0) and this host's
-      // buffered disk writeback is throttled to ~25 MB/s (measured:
-      // dd buffered 24.9 MB/s vs O_DIRECT 376 MB/s) — shuffle I/O, not
-      // CPU, caps the wall. zstd halves shuffle bytes vs lz4 for these
-      // text-heavy rows; the same setting is the standard call on
-      // IO-constrained clusters at 100 TB.
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
+    // Plain profile: its zstd codec is this sweep's call too — the pair
+    // suites are the repo's biggest shufflers (q106 writes tens of GB
+    // of candidate-pair shuffle at sf1.0) and shuffle I/O, not CPU, caps
+    // their wall.
     // var, not val: a fatal per-query error (executor OOM) can take the
     // whole local-mode SparkContext down with it — without a fresh
     // session the remaining suites all die of "stopped SparkContext"
     // instead of reporting their own result (observed in the first
     // sf1.0 run: q164's OOM cascaded into 5 spurious failures).
-    var spark = newSession()
-    spark.sparkContext.setLogLevel("WARN")
+    var spark = GraftSession.local()
     BoundedWindows.quietWindowWarnings()
 
     def maxOf(dir: String, table: String, c: String): Long =
@@ -457,19 +445,11 @@ object PairSweep {
     // ── run ────────────────────────────────────────────────────────────
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\")
       .replace("\"", "\\\"") + "\""
-    // Optional dev filter (same grammar as Bench/Verify/check.py):
-    // comma-separated substrings, bare term includes, "-" prefix
-    // excludes, only-negative filters run everything else. Lets one
-    // suite rerun after a fix or a contended wall-cap breach without
-    // paying the other 17 (the full sweep is ~50 min).
-    val suiteTerms = sys.env.get("SPARK_GRAFT_PAIR_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    val (suiteNeg, suitePos) = suiteTerms.partition(_.startsWith("-"))
-    val selected = suites.filter { case (n, _) =>
-      (suitePos.isEmpty || suitePos.exists(n.contains)) &&
-        !suiteNeg.exists(t => n.contains(t.stripPrefix("-")))
-    }
+    // Optional dev filter (NameFilter grammar). Lets one suite rerun
+    // after a fix or a contended wall-cap breach without paying the
+    // other 17 (the full sweep is ~50 min).
+    val keep = NameFilter(sys.env.getOrElse("SPARK_GRAFT_PAIR_FILTER", ""))
+    val selected = suites.filter { case (n, _) => keep(n) }
     // list mode: print the selected suite names and exit — the
     // fork-per-suite driver (tools/sweep_sf1_pairs_isolated.sh) uses it
     // to enumerate suites without duplicating the registry in bash.
@@ -486,8 +466,7 @@ object PairSweep {
         // down; start fresh so this suite reports its own result
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        spark = newSession()
-        spark.sparkContext.setLogLevel("WARN")
+        spark = GraftSession.local()
         BoundedWindows.quietWindowWarnings()
       }
       val t0 = System.nanoTime()

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.collection.concurrent.TrieMap
+
 /** Table registry for the driver-generated TPC-H-ish testdata
   * (see TESTDATA.md): one parquet file per table under an sf dir.
   *
@@ -35,25 +37,38 @@ object Tables {
     * run, which is the same assumption Spark's own
     * filesourcePartitionFileCacheSize makes.
     */
-  private val planMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
+  private type Memo[V] =
+    java.util.WeakHashMap[SparkSession, TrieMap[(String, String), V]]
+  private val planMemo = new Memo[DataFrame]()
+  // scan partition counts (see scanPartitions), memoized the same way
+  private val partsMemo = new Memo[Int]()
 
-  private def sessionMemo(spark: SparkSession)
-  : scala.collection.concurrent.TrieMap[(String, String), DataFrame] =
-    planMemo.synchronized {
-      var m = planMemo.get(spark)
+  private def sessionMemo[V](memo: Memo[V], spark: SparkSession)
+  : TrieMap[(String, String), V] =
+    memo.synchronized {
+      var m = memo.get(spark)
       if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty
-        planMemo.put(spark, m)
+        m = TrieMap.empty
+        memo.put(spark, m)
       }
       m
     }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    sessionMemo(spark).getOrElseUpdate((sfDir, name),
+    sessionMemo(planMemo, spark).getOrElseUpdate((sfDir, name),
       if (name == "events") loadEvents(spark, sfDir) else
         spark.read.parquet(s"$sfDir/$name.parquet"))
+
+  /** Scan partition count of a table: `.rdd.getNumPartitions` re-plans
+    * the scan on every call (~60 ms), so it is probed once per
+    * (session, dir, table). Filters/projections never change a scan's
+    * partition count, so callers widening a filtered frame may probe the
+    * base table through this.
+    */
+  def scanPartitions(spark: SparkSession, sfDir: String,
+                     name: String): Int =
+    sessionMemo(partsMemo, spark).getOrElseUpdate((sfDir, name),
+      load(spark, sfDir, name).rdd.getNumPartitions)
 
   /** [[load]] + the conditional round-robin widening the CPU-heavy
     * per-row pipelines need (see QueriesExt.tPar, whose backing this
@@ -62,32 +77,8 @@ object Tables {
     * The decision depends only on (dir, table, session width) — width
     * is fixed per session, so the memo key is (dir, "par:" + table).
     */
-  /** Memoized scan partition count of a table (the widening guards'
-    * probe): `.rdd.getNumPartitions` re-plans the scan on every call
-    * (~60 ms). Filters/projections never change a scan's partition
-    * count, so callers widening a filtered frame may probe the base
-    * table through this.
-    */
-  private val partsMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), Int]]()
-
-  def scanPartitions(spark: SparkSession, sfDir: String,
-                     name: String): Int = {
-    val m = partsMemo.synchronized {
-      var x = partsMemo.get(spark)
-      if (x == null) {
-        x = scala.collection.concurrent.TrieMap.empty[(String, String), Int]
-        partsMemo.put(spark, x)
-      }
-      x
-    }
-    m.getOrElseUpdate((sfDir, name),
-      load(spark, sfDir, name).rdd.getNumPartitions)
-  }
-
   def loadPar(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    sessionMemo(spark).getOrElseUpdate((sfDir, "par:" + name), {
+    sessionMemo(planMemo, spark).getOrElseUpdate((sfDir, "par:" + name), {
       val df = load(spark, sfDir, name)
       val width = spark.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions < width) df.repartition(width) else df

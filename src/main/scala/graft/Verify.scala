@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,27 +8,8 @@ object Verify {
       case Array(s, o)    => (s, o, "")
       case Array(s, o, f) => (s, o, f) // filter for local iteration
     }
-    // Filter grammar (comma-separated substrings): a bare term includes
-    // matching queries, a "-" prefix excludes them. With only negative
-    // terms everything not excluded runs — the shape the sf1.0 at-scale
-    // sweep needs (all queries minus the quadratic-oracle pair families).
-    val terms = nameFilter.split(',').map(_.trim).filter(_.nonEmpty)
-    val (neg, pos) = terms.partition(_.startsWith("-"))
-    def selected(name: String): Boolean =
-      (pos.isEmpty || pos.exists(name.contains)) &&
-        !neg.exists(t => name.contains(t.stripPrefix("-")))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same codegen-class-cache sizing as Bench: the 410-query surface
-      // generates far more than the default 100 cached classes
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = NameFilter(nameFilter)
+    val spark = GraftSession.local()
     BoundedWindows.quietWindowWarnings()
     new java.io.File(outDir).mkdirs()
     // A query that throws must stay VISIBLE: write an _ERROR sentinel in

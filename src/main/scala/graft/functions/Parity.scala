@@ -42,10 +42,19 @@ object Parity {
     * [[dsum]] on adversarial doubles. For the bounded control tables the
     * r16 driver-local operators fold (IPF grids, vocab graphs), this
     * replaces a per-iteration Spark aggregation job with plain Scala.
+    *
+    * Domain: a NON-EMPTY input of values with |v| < 1e22. Outside it the
+    * twins part ways — `dsum` over no rows is NULL (so empty input is
+    * rejected here rather than returning 0.0), and a |v| ≥ 1e22 value
+    * overflows decimal(30,8) to NULL, which `dsum` skips but this fold
+    * would add. Every caller folds one `groupBy` group, never empty.
     */
-  def dsumLocal(xs: IterableOnce[Double]): Double =
-    xs.iterator.foldLeft(java.math.BigDecimal.ZERO) { (acc, v) =>
+  def dsumLocal(xs: IterableOnce[Double]): Double = {
+    val it = xs.iterator
+    require(it.hasNext, "dsumLocal: empty input (dsum would be NULL)")
+    it.foldLeft(java.math.BigDecimal.ZERO) { (acc, v) =>
       acc.add(new java.math.BigDecimal(java.lang.Double.toString(v))
         .setScale(8, java.math.RoundingMode.HALF_UP))
     }.doubleValue
+  }
 }

@@ -32,11 +32,14 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
-  test("profile is advisory: every key is a conf, none load-bearing") {
-    // the operators run green on TestSpark's bare session (the whole
-    // suite is the evidence); here just pin the profile's shape
-    assert(GraftSession.profile.keySet.contains("spark.sql.extensions"))
-    assert(GraftSession.profile("spark.sql.extensions") ===
-      "graft.functions.GraftExtensions")
+  test("TestSpark runs the shipped engine: every profile conf + graft_dot") {
+    val s = TestSpark.spark
+    GraftSession.profile.foreach { case (k, v) =>
+      assert(s.conf.get(k) === v, k)
+    }
+    val d = s.sql(
+      "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
+      .head().getDouble(0)
+    assert(d === 11.0)
   }
 }

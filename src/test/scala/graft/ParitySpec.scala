@@ -15,7 +15,6 @@ class ParitySpec extends AnyFunSuite {
   test("dsumLocal ≡ dsum on adversarial doubles, any partitioning") {
     val rng = new scala.util.Random(42)
     val cases: Seq[Seq[Double]] = Seq(
-      Seq.empty,
       Seq(0.0),
       Seq(1.0 / 3.0, 2.0 / 3.0, -1.0 / 3.0),
       // representative of IPF weights: positive, spanning magnitudes
@@ -28,13 +27,16 @@ class ParitySpec extends AnyFunSuite {
       Seq(0.000000005, 0.000000015, -0.000000025)
     )
     cases.zipWithIndex.foreach { case (xs, i) =>
-      val sparkVal =
-        if (xs.isEmpty) null
-        else xs.toDF("x").repartition(7)
-          .agg(Parity.dsum(col("x"))).collect()(0).get(0)
-      if (xs.isEmpty) assert(sparkVal == null)
-      else assert(sparkVal.asInstanceOf[Double] === Parity.dsumLocal(xs),
-        s"case $i")
+      val sparkVal = xs.toDF("x").repartition(7)
+        .agg(Parity.dsum(col("x"))).head().getDouble(0)
+      assert(sparkVal === Parity.dsumLocal(xs), s"case $i")
     }
+  }
+
+  test("empty input: dsum is NULL, dsumLocal rejects it") {
+    val row = Seq.empty[Double].toDF("x").repartition(7)
+      .agg(Parity.dsum(col("x"))).head()
+    assert(row.isNullAt(0))
+    intercept[IllegalArgumentException](Parity.dsumLocal(Seq.empty))
   }
 }

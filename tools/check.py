@@ -39,7 +39,7 @@ neg = [t[1:] for t in terms if t.startswith("-")]
 pos = [t for t in terms if not t.startswith("-")]
 
 def selected(name):
-    # same grammar as graft.Verify: bare terms include, "-" excludes;
+    # same grammar as graft.NameFilter: bare terms include, "-" excludes;
     # only-negative filters run everything not excluded
     return ((not pos or any(t in name for t in pos))
             and not any(t in name for t in neg))

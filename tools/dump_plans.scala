@@ -3,17 +3,14 @@
 //   /opt/spark/bin/spark-shell --master 'local[8]' \
 //     --conf spark.sql.shuffle.partitions=8 --conf spark.ui.enabled=false \
 //     --driver-class-path target/scala-2.13/classes -I tools/dump_plans.scala
-// Filter grammar = the house one (comma substrings, "-" excludes).
+// Filter grammar = graft.NameFilter (comma substrings, "-" excludes).
 import graft._
 import java.nio.file.{Files, Paths}
 locally {
   val dir = sys.env.getOrElse("SPARK_GRAFT_PLAN_SF", "/root/testdata/sf0.1")
   val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "r16")
   val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-  val terms = sys.env.getOrElse("SPARK_GRAFT_PLAN_FILTER", "").split(',').map(_.trim).filter(_.nonEmpty).toSeq
-  val negT = terms.filter(_.startsWith("-"))
-  val posT = terms.filterNot(_.startsWith("-"))
-  def selected(n: String): Boolean = (posT.isEmpty || posT.exists(n.contains)) && !negT.exists(t => n.contains(t.stripPrefix("-")))
+  val selected = NameFilter(sys.env.getOrElse("SPARK_GRAFT_PLAN_FILTER", ""))
   val outDir = Paths.get(s"plans/$tag")
   Files.createDirectories(outDir)
   SparkEntry.queries.toSeq.sortBy(_._1).filter(p => selected(p._1)).foreach { case (name, fn) =>

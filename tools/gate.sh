@@ -13,5 +13,5 @@ for sf in sf0.01 sf0.1; do
   python3 tools/check.py "/root/testdata/${sf}" "${out}"
 done
 
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"'
+# Bench's default scale factor is sf0.1
+sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"'

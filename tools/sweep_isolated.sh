@@ -15,7 +15,7 @@
 # `sbt -batch compile` first (the script checks).
 #
 # Usage: tools/sweep_isolated.sh pairs|general [OUT.json]
-# Env:   SPARK_DRIVER_MEM (default 16g), SPARK_GRAFT_CPUS (default 32),
+# Env:   SPARK_DRIVER_MEM (default 16g), SPARK_GRAFT_CPUS (default nproc),
 #        SPARK_GRAFT_SWEEP_SAMPLES, SPARK_GRAFT_PAIR_FILTER /
 #        SPARK_GRAFT_GEN_FILTER (narrow the suite list as usual).
 set -euo pipefail

@@ -30,6 +30,5 @@ if [ ! -f target/sf1.0/lineitem.parquet ]; then
 fi
 
 out=/tmp/verify_sf1
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-  sbt -batch "runMain graft.Verify $(pwd)/target/sf1.0 ${out} ${EXCL}"
+sbt -batch "runMain graft.Verify $(pwd)/target/sf1.0 ${out} ${EXCL}"
 python3 tools/check.py "$(pwd)/target/sf1.0" "${out}" "${EXCL}"

@@ -19,5 +19,5 @@ fi
 # 8-16g vs 290-1073s at 64g; q164 115s at 16g vs 103/576s at 64g) --
 # the r11 OOM this once guarded against was fixed by the DISK_ONLY
 # result materialization, not by heap size.
-SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-16g} SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-16g} \
   sbt -batch "runMain graft.PairSweep $(pwd)/target/sf1.0 /root/testdata/sf0.1 SWEEP_SF1_PAIRS.json"
